@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 def arrow_local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` through the Arrow path.
 
-    ``rows`` is a driver-local list of tuples/Rows; ``schema`` a DDL
+    ``rows`` is a driver-local iterable of tuples/Rows; ``schema`` a DDL
     string or StructType. Values are carried in object-dtype pandas
     columns, so ints stay exact (no float64 round trip) and None stays
     NULL; naive datetimes are localized to the session timezone (this
@@ -34,6 +34,7 @@ def arrow_local_df(spark: SparkSession, rows, schema) -> DataFrame:
     Falls back to the classic ``createDataFrame`` on any conversion
     error rather than failing the query.
     """
+    rows = list(rows)  # a generator would be exhausted by the first column
     if not rows:
         return spark.createDataFrame([], schema)
     try:

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 
 class TestStatus(str, Enum):
+    __test__ = False  # not a pytest test class despite the name
+
     PASS = "pass"
     WARN = "warn"
     ERROR = "error"
@@ -98,6 +100,8 @@ def verdict_frame(failing_rows: DataFrame) -> DataFrame:
 
 @dataclass
 class TestResult:
+    __test__ = False  # not a pytest test class despite the name
+
     name: str
     status: TestStatus
     failures: int

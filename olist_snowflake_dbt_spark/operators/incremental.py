@@ -12,10 +12,11 @@ payloads.
 
 Scale notes (100 TB):
 - ``append`` touches only the new files — no shuffle at all.
-- ``merge``/``delete+insert`` on plain Parquet rewrite the table; with a
-  ``partition_by`` layout, :class:`IncrementalTable` prunes the rewrite to
-  ONLY the partitions present in the batch (dynamic partition overwrite),
-  which is the strategy that stays tractable at scale.
+- ``merge``/``delete+insert`` on plain Parquet rewrite the whole table,
+  with or without a ``partition_by`` layout: :class:`IncrementalTable`
+  publishes every generation through ``plans.materialize._publish``, the
+  single write-to-tmp + backup-swap publish path. Rewriting only the
+  touched partitions needs a partition-level commit behind that path.
 - The anti-join's batch side is typically small → AQE converts it to a
   broadcast join; no full shuffle of the existing table.
 - ``microbatch`` = insert_overwrite keyed by an event-time bucket — each
@@ -28,6 +29,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..plans.materialize import _publish
 
 
 def incremental_append(existing: DataFrame, batch: DataFrame) -> DataFrame:
@@ -154,11 +157,11 @@ def incremental_microbatch(
 class IncrementalTable:
     """A parquet-backed incremental model: applies a strategy and persists.
 
-    With ``partition_by`` set, merge/delete+insert only rewrite the
-    partitions the batch touches (reads prune via the partition filter) —
-    the 100 TB-viable path. Without it, the whole table is rewritten
-    (documented plain-Parquet limitation; a lakehouse format would do
-    row-level MERGE)."""
+    ``partition_by`` sets the on-disk layout, so downstream reads prune
+    by partition. Every strategy except a schema-preserving ``append``
+    rewrites the whole table and publishes it atomically through
+    ``plans.materialize._publish`` (documented plain-Parquet limitation;
+    a lakehouse format would do row-level MERGE)."""
 
     def __init__(
         self,
@@ -235,33 +238,6 @@ class IncrementalTable:
             return existing.select(*keep), batch.select(*keep)
         raise ValueError(f"unknown on_schema_change: {on_schema_change!r}")
 
-    def _write_full(self, df: DataFrame) -> None:
-        import os
-        import shutil
-        import uuid
-
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(tmp)
-        # backup-swap, never delete-then-rename: the old generation must
-        # stay restorable until the new one is fully in place — a crash
-        # between an rmtree and the rename would lose the table outright.
-        # (Renames are metadata ops; the lazy `df` reading the standing
-        # files is safe because the write above already materialized it.)
-        backup = f"{self.path}.backup-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, backup)
-        try:
-            os.rename(tmp, self.path)
-        except OSError:
-            if os.path.exists(backup):
-                os.rename(backup, self.path)
-            raise
-        if os.path.exists(backup):
-            shutil.rmtree(backup, ignore_errors=True)
-
     def apply(
         self,
         batch: DataFrame,
@@ -280,8 +256,7 @@ class IncrementalTable:
         # this batch alone, whatever the configured strategy
         # ($DBT/dbt/context/providers.py should_full_refresh semantics)
         if full_refresh or not self.exists():
-            self._write_full(batch)
-            return self.read()
+            return _publish(self.spark, batch, self.path, self.partition_by)
         existing = self.read()
         standing_cols = list(existing.columns)
         existing, batch = self._reconcile_schema(existing, batch, on_schema_change)
@@ -295,8 +270,12 @@ class IncrementalTable:
                 # inserting (on_schema_change.sql sync_column_schemas); the
                 # plain-parquet equivalent is a full rewrite carrying the
                 # reconciled schema.
-                self._write_full(existing.unionByName(batch))
-                return self.read()
+                return _publish(
+                    self.spark,
+                    existing.unionByName(batch),
+                    self.path,
+                    self.partition_by,
+                )
             # column set unchanged → no rewrite of history: append-mode
             # write only adds files
             w = batch.write.mode("append")
@@ -346,20 +325,9 @@ class IncrementalTable:
         else:
             raise ValueError(f"unknown incremental strategy: {strategy!r}")
         if out_of_scope is not None:
-            # carry the unscanned slice over untouched; the partition
-            # pruning below recomputes untouched rows from the FULL
-            # standing table, so the union here must happen first
+            # carry the unscanned slice over untouched
             out = out_of_scope.unionByName(out)
-        if self.partition_by and strategy in ("merge", "delete+insert"):
-            # prune the rewrite to touched partitions only
-            parts = batch.select(*self.partition_by).dropDuplicates()
-            touched = out.join(parts, list(self.partition_by), "left_semi")
-            untouched_path_df = existing.join(parts, list(self.partition_by), "left_anti")
-            out = untouched_path_df.unionByName(touched)
-            # (plain parquet still rewrites files; a metastore/format with
-            # partition-level commit would swap only touched partitions)
-        self._write_full(out)
-        return self.read()
+        return _publish(self.spark, out, self.path, self.partition_by)
 
 
 def cdc_apply(

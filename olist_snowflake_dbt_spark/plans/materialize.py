@@ -68,22 +68,43 @@ def materialize_table(
     (macros/materializations/models/table.sql:17-50) on a filesystem.
     """
     final = os.path.join(warehouse_dir, name)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    _atomic_swap(final, tmp)
-    out = spark.read.parquet(final)
+    out = _publish(spark, df, final, partition_by)
     out.createOrReplaceTempView(name)
     return MaterializedRelation(name, "table", final, out)
 
 
+def _publish(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_by: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one publish path for a parquet relation: write ``df`` to
+    ``<path>.tmp-<token>``, :func:`_atomic_swap` it over ``path``, and
+    return a fresh read of the published files. A lazy ``df`` that reads
+    the standing files is safe: the write materializes it before the
+    swap moves those files away."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp)
+    _atomic_swap(path, tmp)
+    return spark.read.parquet(path)
+
+
 def _atomic_swap(final: str, tmp: str) -> None:
-    """Publish ``tmp`` over ``final`` with restore-on-failure (the
-    rename-swap from :func:`materialize_table`, shared by maintenance
-    ops)."""
-    backup = f"{final}.backup-{uuid.uuid4().hex[:8]}"
+    """Publish ``tmp`` over ``final`` with restore-on-failure: back the
+    old generation up, rename ``tmp`` in, restore the backup if that
+    rename fails, then drop the backup. Never delete-then-rename — the
+    old generation stays restorable until the new one is in place. The
+    backup is a dot-prefixed sibling, which Spark's file listing skips,
+    so swapping one partition directory inside a table leaves no
+    leftover that readers or partition inference could see."""
+    backup = os.path.join(
+        os.path.dirname(final),
+        f".{os.path.basename(final)}.backup-{uuid.uuid4().hex[:8]}",
+    )
     if os.path.exists(final):
         os.rename(final, backup)
     try:
@@ -122,9 +143,7 @@ def compact_table(
     cluster the same two lines go through the Hadoop FileSystem API.
     The swap keeps readers on the old files until the rename."""
     n = max(1, -(-_dir_bytes(path) // target_file_bytes))
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(tmp)
-    _atomic_swap(path, tmp)
+    _publish(spark, spark.read.parquet(path).repartition(n), path)
     return sum(
         1 for f in os.listdir(path) if f.endswith(".parquet")
     )
@@ -147,15 +166,13 @@ def materialize_clustered_table(
     predicate is a range on one key (time, id). Disjointness is
     asserted from the written footers in tests/test_formats.py."""
     final = os.path.join(warehouse_dir, name)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-    (
-        df.repartitionByRange(num_files, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode("overwrite")
-        .parquet(tmp)
+    out = _publish(
+        spark,
+        df.repartitionByRange(num_files, *cluster_by).sortWithinPartitions(
+            *cluster_by
+        ),
+        final,
     )
-    _atomic_swap(final, tmp)
-    out = spark.read.parquet(final)
     out.createOrReplaceTempView(name)
     return MaterializedRelation(name, "clustered_table", final, out)
 
@@ -166,7 +183,7 @@ def clone_table(src: str, dst: str) -> int:
     is HARDLINKED into ``dst`` — no bytes copied, metadata-only, exactly
     Snowflake's pointer semantics. Safe because every writer in this
     repo publishes immutable files via write-to-tmp + atomic rename
-    (:func:`_atomic_swap`, ``IncrementalTable._write_full``): a later
+    (:func:`_publish` / :func:`_atomic_swap`): a later
     overwrite of either table swaps in NEW files and never mutates a
     linked one, so clones diverge copy-on-write like Snowflake's. Falls
     back to a real copy across filesystems (EXDEV). Returns the file
@@ -215,10 +232,11 @@ class DynamicTable:
       fresh checkpoint so the bounded source replays entirely and merge
       overwrites every key with recomputed values.
 
-    Scale shape: state is one row per group key; the merge touches only
-    changed keys (anti-join + union inside
-    ``operators.incremental.incremental_merge``, pruned to touched
-    partitions when ``partition_by`` is set). Nothing is collected."""
+    Scale shape: state is one row per group key; the merge replaces
+    only changed keys (anti-join + union inside
+    ``operators.incremental.incremental_merge``), but each micro-batch
+    merge rewrites the whole parquet target through :func:`_publish`,
+    even when ``partition_by`` is set. Nothing is collected."""
 
     def __init__(
         self,
@@ -335,17 +353,14 @@ def materialize_zorder_table(
     Per-dimension file-skipping is asserted from written footers in
     tests/test_formats.py."""
     final = os.path.join(warehouse_dir, name)
-    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
     zdf = df.withColumn("__z", zorder_value(df, zorder_by, bits_per_dim))
-    (
+    out = _publish(
+        spark,
         zdf.repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z", *zorder_by)
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(tmp)
+        .drop("__z"),
+        final,
     )
-    _atomic_swap(final, tmp)
-    out = spark.read.parquet(final)
     out.createOrReplaceTempView(name)
     return MaterializedRelation(name, "zorder_table", final, out)
 

@@ -48,6 +48,8 @@ from .sources.seeds import seed_to_parquet
 class TestSpec:
     """A declared data-quality test bound to a model (schema.yml analogue)."""
 
+    __test__ = False  # not a pytest test class despite the name
+
     name: str
     model: str
     builder: Callable[[DataFrame, "Engine"], DataFrame]  # → failing rows
@@ -835,6 +837,7 @@ class Engine:
         descendant is marked ``skipped``, and independent branches keep
         building. Returns per-node status — the dbt run-results shape
         (also retained for :meth:`retry`)."""
+        select, exclude = self._resolve_selection(select, exclude, None)
         selected = self.registry.select(select, exclude=exclude)
         self.registry.invalidate()
         order = self.registry.topological_order(

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.materialize import _publish
+
 # Candidate regexes, tested in dbt-agate precedence order on non-null values.
 _INT_RE = r"^[-+]?\d{1,18}$"
 _NUM_RE = r"^[-+]?(\d+\.?\d*|\.\d+)([eE][-+]?\d+)?$"
@@ -48,16 +50,16 @@ def _read_raw_strings(spark: SparkSession, path: str) -> DataFrame:
             mode="PERMISSIVE",
         ).csv(path)
     )
-    # Strip a BOM that survived into the first header name.
-    renames = {c: c.lstrip("\ufeff").strip() for c in df.columns}
-    for old, new in renames.items():
-        if old != new:
-            df = df.withColumnRenamed(old, new)
-    for c in df.columns:
-        df = df.withColumn(
-            c, F.when(F.lower(F.col(c)).isin(*_NULL_LITERALS), None).otherwise(F.col(c))
-        )
-    return df
+    # Strip a BOM that survived into the first header name; map the NULL
+    # literals to NULL.
+    return df.select(
+        *[
+            F.when(F.lower(F.col(c)).isin(*_NULL_LITERALS), None)
+            .otherwise(F.col(c))
+            .alias(c.lstrip("\ufeff").strip())
+            for c in df.columns
+        ]
+    )
 
 
 def infer_seed_schema(raw: DataFrame) -> T.StructType:
@@ -162,13 +164,13 @@ def seed_to_parquet(
 ) -> DataFrame:
     """Full seed materialization: CSV → typed table on Parquet.
 
-    Re-run overwrites (the reference's TRUNCATE+INSERT and --full-refresh
-    paths both collapse to mode=overwrite — seeds/seed.sql:23-30)."""
+    Re-run replaces the table atomically (the reference's TRUNCATE+INSERT
+    runs in one transaction — seeds/seed.sql:23-30): the new generation
+    is published through ``plans.materialize._publish``, so a failed
+    re-seed leaves the previous table intact."""
     import os
 
     df = read_seed_csv(spark, csv_path, schema, column_types=column_types)
-    path = os.path.join(out_dir, name)
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
+    out = _publish(spark, df, os.path.join(out_dir, name))
     out.createOrReplaceTempView(name)
     return out

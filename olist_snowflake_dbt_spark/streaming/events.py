@@ -591,14 +591,15 @@ def cdc_apply_stream(
     unlike admission it cannot append — bounded rewrite is the floor,
     and every crash point stays replay-idempotent (a partial set of
     bucket swaps re-merges to identical content). ``n_buckets=None``
-    keeps the legacy monolithic tmp → rename swap. Returns the
-    DataStreamWriter (caller starts + awaits)."""
+    keeps the monolithic layout, rewritten and published whole through
+    ``plans.materialize._publish``. Returns the DataStreamWriter
+    (caller starts + awaits)."""
     import glob as _glob
     import shutil as _shutil
     import uuid as _uuid
 
     from ..operators.incremental import cdc_latest
-    from ..plans.materialize import _atomic_swap
+    from ..plans.materialize import _atomic_swap, _publish
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -620,9 +621,7 @@ def cdc_apply_stream(
                     )
                 else:
                     merged = collapsed
-                tmp = f"{state_path}.tmp-{_uuid.uuid4().hex[:8]}"
-                merged.write.mode("overwrite").parquet(tmp)
-                _atomic_swap(state_path, tmp)
+                _publish(spark, merged, state_path)
                 return
             # persist the collapsed batch: the touched-bucket collect
             # and the merge write are separate ACTIONS — unpersisted,
@@ -670,16 +669,7 @@ def cdc_apply_stream(
                 if not os.path.exists(src):
                     continue  # bucket merged to zero rows (cannot happen
                     # with tombstone retention, but stay defensive)
-                backup = os.path.join(state_path, f".backup-{b}-{tag}")
-                if os.path.exists(dst):
-                    os.rename(dst, backup)
-                try:
-                    os.rename(src, dst)
-                except OSError:
-                    if os.path.exists(backup):
-                        os.rename(backup, dst)
-                    raise
-                _shutil.rmtree(backup, ignore_errors=True)
+                _atomic_swap(dst, src)
             _shutil.rmtree(stage, ignore_errors=True)
         finally:
             try:
@@ -761,10 +751,10 @@ def dedup_admission_stream(
     a compaction task. Returns the DataStreamWriter (caller starts +
     awaits)."""
     import glob as _glob
-    import shutil as _shutil
     import uuid as _uuid
 
     from ..functions.text import fingerprint
+    from ..plans.materialize import _atomic_swap
 
     def _admit(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -842,14 +832,7 @@ def dedup_admission_stream(
                 spark.read.parquet(bdir).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(tmp)
-                backup = os.path.join(state_path, f".backup-{tag}")
-                os.rename(bdir, backup)
-                try:
-                    os.rename(tmp, bdir)
-                except OSError:
-                    os.rename(backup, bdir)
-                    raise
-                _shutil.rmtree(backup, ignore_errors=True)
+                _atomic_swap(bdir, tmp)
         finally:
             try:
                 batch_fp.unpersist()  # scoped to this micro-batch

@@ -13,8 +13,10 @@ Surfaces:
   publish and manifest replace, and between manifest replace and
   superseded-file cleanup. The commit protocol is plain driver-side
   Python, so it is unit-tested in-process with the real writer.
-- ``IncrementalTable._write_full`` (operators/incremental.py): crash
-  during the backup-swap publish — the standing table must be restored.
+- ``plans.materialize._publish``, the one publish path behind
+  ``IncrementalTable.apply``, ``materialize_table`` and
+  ``seed_to_parquet``: crash during the backup-swap publish — the
+  standing table must be restored.
 - ``DynamicTable.refresh`` (plans/materialize.py): a merge failure mid
   micro-batch must leave the standing table untouched, and a retry
   against the SAME checkpoint must replay the uncommitted batch and
@@ -145,18 +147,50 @@ def test_jsonl_sink_crash_after_manifest_before_cleanup(tmp_path, monkeypatch):
     assert sum(m["rows"] for m in _manifest_rows(out)) == 2
 
 
-def test_incremental_write_full_crash_restores_old_generation(
-    spark, tmp_path, monkeypatch
-):
-    """Crash during the backup-swap publish (tmp→final rename fails):
-    the standing table must be RESTORED from backup — never a window
-    where the table is missing or half-replaced."""
+def _write_incremental(spark, tmp_path, rows):
     from olist_snowflake_dbt_spark.operators.incremental import IncrementalTable
 
     path = str(tmp_path / "tbl")
-    t = IncrementalTable(spark, path)
-    t.apply(spark.range(0, 10).select("id", (F.col("id") * 2).alias("v")))
-    assert t.read().count() == 10
+    IncrementalTable(spark, path).apply(
+        spark.createDataFrame(rows, "id long, v long"),
+        strategy="merge",
+        unique_key=["id"],
+    )
+    return path
+
+
+def _write_table(spark, tmp_path, rows):
+    from olist_snowflake_dbt_spark.plans.materialize import materialize_table
+
+    rel = materialize_table(
+        spark, "tbl", spark.createDataFrame(rows, "id long, v long"), str(tmp_path)
+    )
+    return rel.path
+
+
+def _write_seed(spark, tmp_path, rows):
+    from olist_snowflake_dbt_spark.sources.seeds import seed_to_parquet
+
+    csv = tmp_path / "tbl.csv"
+    csv.write_text("id,v\n" + "".join(f"{i},{v}\n" for i, v in rows))
+    seed_to_parquet(spark, str(csv), str(tmp_path), "tbl")
+    return str(tmp_path / "tbl")
+
+
+@pytest.mark.parametrize(
+    "write",
+    [_write_incremental, _write_table, _write_seed],
+    ids=["incremental", "materialize_table", "seed"],
+)
+def test_publish_crash_restores_old_generation(
+    spark, tmp_path, monkeypatch, write
+):
+    """Crash during the backup-swap publish (tmp→final rename fails):
+    the standing table must be RESTORED from backup — never a window
+    where the table is missing or half-replaced. Covers every writer
+    that publishes through plans.materialize._publish."""
+    path = write(spark, tmp_path, [(i, i * 2) for i in range(10)])
+    assert spark.read.parquet(path).count() == 10
 
     real_rename = os.rename
     fired = {"n": 0}
@@ -171,16 +205,12 @@ def test_incremental_write_full_crash_restores_old_generation(
 
     monkeypatch.setattr(os, "rename", failing_publish)
     with pytest.raises(OSError, match="injected crash"):
-        t.apply(
-            spark.range(0, 5).select("id", (F.col("id") * 3).alias("v")),
-            strategy="merge",
-            unique_key=["id"],
-        )
+        write(spark, tmp_path, [(i, i * 3) for i in range(5)])
     monkeypatch.undo()
     assert fired["n"] == 1
 
     # old generation restored and fully readable
-    back = t.read()
+    back = spark.read.parquet(path)
     assert back.count() == 10
     assert back.filter(F.col("v") != F.col("id") * 2).count() == 0
     # no half-published backup dir left claiming to be the table

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from olist_snowflake_dbt_spark.operators.incremental import (
     IncrementalTable,
     incremental_append,
@@ -91,6 +93,25 @@ def test_incremental_table_lifecycle(spark, tmp_path):
     assert out == {1: "a", 2: "b2", 3: "c"}
     t.apply(_df(spark, [(4, "d", dt.datetime(2020, 1, 3))]), strategy="append")
     assert t.read().count() == 4
+
+
+@pytest.mark.parametrize("strategy", ["merge", "delete+insert"])
+def test_partitioned_upsert_moving_key_keeps_one_row(spark, tmp_path, strategy):
+    """A batch row that moves its key to another partition replaces the
+    old row: one row per key, the same result as the unpartitioned
+    table."""
+    schema = "id long, m string, v string"
+    results = {}
+    for name, parts in (("part", ("m",)), ("flat", ())):
+        t = IncrementalTable(spark, str(tmp_path / name), partition_by=parts)
+        t.apply(spark.createDataFrame([(1, "jan", "old"), (2, "feb", "x")], schema))
+        out = t.apply(
+            spark.createDataFrame([(1, "mar", "new")], schema),
+            strategy=strategy,
+            unique_key=["id"],
+        )
+        results[name] = sorted(tuple(r) for r in out.select("id", "m", "v").collect())
+    assert results["part"] == results["flat"] == [(1, "mar", "new"), (2, "feb", "x")]
 
 
 def test_scd2_timestamp_strategy(spark):

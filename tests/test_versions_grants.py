@@ -294,6 +294,7 @@ class TestNamedSelectors:
         assert eng.ls(select="mart_b") == ["mart_b"]
         out = eng.run()
         assert set(out) == {"mart_a", "stg"}
+        assert set(eng.run_keep_going()) == {"mart_a", "stg"}
 
     def test_selector_mutually_exclusive_and_unknown(self, spark, tmp_path):
         eng = self._engine(spark, tmp_path)
