@@ -17,6 +17,11 @@ Scale notes (100 TB):
   publishes every generation through ``plans.materialize._publish``, the
   single write-to-tmp + backup-swap publish path. Rewriting only the
   touched partitions needs a partition-level commit behind that path.
+- A partitioned generation holds one file per partition value (split
+  only past AQE's advisory partition size), so the next merge and every
+  dq scan pay one task and one footer per partition, not per
+  (task, partition) pair. Partition directories are listed in the
+  driver below 1024 entries, so reading the table runs no listing job.
 - The anti-join's batch side is typically small → AQE converts it to a
   broadcast join; no full shuffle of the existing table.
 - ``microbatch`` = insert_overwrite keyed by an event-time bucket — each
@@ -30,7 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.materialize import _publish
+from ..plans.materialize import _partitioned_writer, _publish
 
 
 def incremental_append(existing: DataFrame, batch: DataFrame) -> DataFrame:
@@ -161,7 +166,12 @@ class IncrementalTable:
     by partition. Every strategy except a schema-preserving ``append``
     rewrites the whole table and publishes it atomically through
     ``plans.materialize._publish`` (documented plain-Parquet limitation;
-    a lakehouse format would do row-level MERGE)."""
+    a lakehouse format would do row-level MERGE). Partitioned writes,
+    appends included, go through ``plans.materialize._partitioned_writer``:
+    a generation holds one file per partition value (split past AQE's
+    advisory partition size), and an append adds one file per partition
+    it touches. Below 1024 partition directories the driver lists them
+    itself, without a listing job."""
 
     def __init__(
         self,
@@ -278,10 +288,9 @@ class IncrementalTable:
                 )
             # column set unchanged → no rewrite of history: append-mode
             # write only adds files
-            w = batch.write.mode("append")
-            if self.partition_by:
-                w = w.partitionBy(*self.partition_by)
-            w.parquet(self.path)
+            _partitioned_writer(batch, self.partition_by).mode("append").parquet(
+                self.path
+            )
             return self.read()
         out_of_scope = None
         if incremental_predicates and strategy in ("merge", "delete+insert"):

@@ -20,7 +20,12 @@ Reference semantics (SURVEY.md §2 A17-A19):
 At 100 TB: table writes accept ``partition_by`` (maps to
 ``DataFrameWriter.partitionBy`` for partition-pruned reads downstream) and
 ``buckets`` (hash-bucketed layout so later equi-joins/aggs on the bucket key
-avoid a shuffle). Plain Parquet directory-rename publish is atomic on
+avoid a shuffle). A partitioned write is clustered
+(:func:`_partitioned_writer`): each generation holds one file per partition
+value, split only past AQE's advisory partition size, instead of one file
+per (task, partition) pair. Partition directories are listed in the driver
+below 1024 entries (``session._DEFAULTS``), so reading such a table runs no
+listing job. Plain Parquet directory-rename publish is atomic on
 HDFS/local POSIX; on object stores you'd swap a metastore pointer or use a
 table format — documented tradeoff, same engine API.
 """
@@ -30,10 +35,11 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Literal
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 Materialization = Literal[
@@ -85,12 +91,25 @@ def _publish(
     the standing files is safe: the write materializes it before the
     swap moves those files away."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    _partitioned_writer(df, partition_by).mode("overwrite").parquet(tmp)
     _atomic_swap(path, tmp)
     return spark.read.parquet(path)
+
+
+def _partitioned_writer(
+    df: DataFrame, partition_by: Sequence[str] = ()
+) -> DataFrameWriter:
+    """The writer for ``df`` laid out by ``partition_by``. A partitioned
+    write is clustered first with AQE's ``rebalance`` hint: each
+    partition value goes to one task, small partitions are coalesced,
+    and only a value past the advisory partition size is split across
+    tasks. So a generation holds one file per partition value instead
+    of one per (task, partition) pair. A plain ``repartition(*cols)``
+    would also give one file per value, but would write a skewed value
+    from a single task. Unpartitioned writes are left as they are."""
+    if not partition_by:
+        return df.write
+    return df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
 
 
 def _atomic_swap(final: str, tmp: str) -> None:
@@ -117,13 +136,37 @@ def _atomic_swap(final: str, tmp: str) -> None:
         shutil.rmtree(backup, ignore_errors=True)
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+def _data_files(path: str) -> list[str]:
+    """Every data file under ``path``, partition directories included;
+    ``_``/``.``-prefixed files and directories are skipped, like
+    Spark's own listing skips them."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out.extend(
+            os.path.join(root, f) for f in files if not f.startswith(("_", "."))
+        )
+    return out
+
+
+def _partition_columns(path: str) -> tuple[str, ...]:
+    """The partition columns of a parquet directory, read off its
+    ``col=value`` directory chain (the first such directory per level)."""
+    cols: list[str] = []
+    while True:
+        sub = next(
+            (
+                e
+                for e in os.scandir(path)
+                if e.is_dir() and "=" in e.name
+                and not e.name.startswith(("_", "."))
+            ),
+            None,
+        )
+        if sub is None:
+            return tuple(cols)
+        cols.append(sub.name.split("=", 1)[0])
+        path = sub.path
 
 
 def compact_table(
@@ -131,7 +174,7 @@ def compact_table(
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
     ``ceil(bytes / target)`` evenly-sized files and atomically swap it
-    in. Returns the new file count.
+    in. Returns the new data file count.
 
     THE recurring maintenance op of a 100 TB lakehouse: streaming and
     incremental writers leave thousands of KB-scale files per partition,
@@ -139,14 +182,21 @@ def compact_table(
     scheduling) instead of bytes. ``repartition`` (round-robin shuffle)
     is chosen over ``coalesce`` deliberately — coalesce merges unevenly
     and can leave one giant file per final task; even file sizes are the
-    point of compaction. Sizing here walks the local directory; on a
-    cluster the same two lines go through the Hadoop FileSystem API.
-    The swap keeps readers on the old files until the rename."""
-    n = max(1, -(-_dir_bytes(path) // target_file_bytes))
-    _publish(spark, spark.read.parquet(path).repartition(n), path)
-    return sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    )
+    point of compaction. A partitioned table keeps its ``col=value``
+    layout (the columns are read off the directory chain) and is
+    republished through the clustered partitioned write: one file per
+    partition value, split past AQE's advisory partition size rather
+    than at ``target_file_bytes``. Sizing here walks the local
+    directory; on a cluster the same calls go through the Hadoop
+    FileSystem API. The swap keeps readers on the old files until the
+    rename."""
+    partition_by = _partition_columns(path)
+    df = spark.read.parquet(path)
+    if not partition_by:
+        size = sum(os.path.getsize(f) for f in _data_files(path))
+        df = df.repartition(max(1, -(-size // target_file_bytes)))
+    _publish(spark, df, path, partition_by)
+    return len(_data_files(path))
 
 
 def materialize_clustered_table(

@@ -47,6 +47,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .materialize import _partitioned_writer
+
 
 class VersionedTable:
     """A named table whose every publish is a retained generation.
@@ -94,10 +96,7 @@ class VersionedTable:
         next_v = (vs[-1]["version"] + 1) if vs else 1
         gen = os.path.join(self.root, f"v={next_v}")
         tmp = f"{gen}.tmp-{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
+        _partitioned_writer(df, partition_by).mode("overwrite").parquet(tmp)
         if os.path.exists(gen):
             # Orphan from a publish that crashed between the data rename
             # and the manifest commit — the manifest is the source of

@@ -16,8 +16,16 @@ from olist_snowflake_dbt_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("pytest", **{"spark.sql.shuffle.partitions": "4"})
+def spark(tmp_path_factory):
+    # a per-run warehouse: catalog tables a killed run leaves behind
+    # cannot collide with the next run's saveAsTable
+    s = get_spark(
+        "pytest",
+        **{
+            "spark.sql.shuffle.partitions": "4",
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("warehouse")),
+        },
+    )
     yield s
 
 

@@ -92,6 +92,27 @@ def test_compact_table_merges_small_files(spark, tmp_path):
     assert back.count() == 10000
     assert back.agg(F.sum("id")).first()[0] == 10000 * 9999 // 2
 
+    # a partitioned table keeps its col=value layout: one file per
+    # partition value, and a filter on the column still prunes
+    part = str(tmp_path / "frag_part")
+    spark.range(10000).withColumn("m", F.col("id") % 4).repartition(8).write.partitionBy(
+        "m"
+    ).parquet(part)
+    assert compact_table(spark, part, target_file_bytes=1 << 30) == 4
+    assert sorted(d for d in os.listdir(part) if not d.startswith(("_", "."))) == [
+        f"m={m}" for m in range(4)
+    ]
+    for m in range(4):
+        files = os.listdir(os.path.join(part, f"m={m}"))
+        assert sum(f.endswith(".parquet") for f in files) == 1
+    back = spark.read.parquet(part)
+    assert back.count() == 10000
+    assert back.agg(F.sum("id")).first()[0] == 10000 * 9999 // 2
+    pruned = back.filter(F.col("m") == 2)
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(m" in plan
+    assert pruned.count() == 2500
+
 
 def test_clustered_table_files_own_disjoint_ranges(spark, tmp_path, sf_dir):
     import pyarrow.parquet as pq

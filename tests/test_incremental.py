@@ -1,8 +1,11 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
+import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
 from olist_snowflake_dbt_spark.operators.incremental import (
     IncrementalTable,
@@ -112,6 +115,83 @@ def test_partitioned_upsert_moving_key_keeps_one_row(spark, tmp_path, strategy):
         )
         results[name] = sorted(tuple(r) for r in out.select("id", "m", "v").collect())
     assert results["part"] == results["flat"] == [(1, "mar", "new"), (2, "feb", "x")]
+
+
+def _files_per_partition(path):
+    """``col=value`` directory (relative to ``path``) → data file count."""
+    out = {}
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if root != path:
+            out[os.path.relpath(root, path)] = sum(f.endswith(".parquet") for f in files)
+    return out
+
+
+def test_partitioned_merge_writes_one_file_per_partition(spark, tmp_path):
+    """Every generation of a partitioned table holds one file per
+    partition value, even when several tasks hold rows of every
+    partition, and the rows equal the unpartitioned table's."""
+
+    def rows(lo, hi, shift, v):
+        return spark.range(lo, hi).repartition(4).select(
+            "id", ((F.col("id") + shift) % 6).alias("m"), F.lit(v).alias("v")
+        )
+
+    tables = {
+        name: IncrementalTable(spark, str(tmp_path / name), partition_by=parts)
+        for name, parts in (("part", ("m",)), ("flat", ()))
+    }
+    for t in tables.values():
+        t.apply(rows(0, 400, 0, "v0"))
+    assert _files_per_partition(tables["part"].path) == {f"m={m}": 1 for m in range(6)}
+    for i in range(1, 4):
+        batch = rows(i * 100, i * 100 + 200, i, f"v{i}")
+        results = {
+            name: sorted(
+                tuple(r)
+                for r in t.apply(batch, strategy="merge", unique_key=["id"])
+                .select("id", "m", "v")
+                .collect()
+            )
+            for name, t in tables.items()
+        }
+        assert results["part"] == results["flat"]
+        assert len(results["part"]) == max(400, i * 100 + 200)
+        assert _files_per_partition(tables["part"].path) == {
+            f"m={m}": 1 for m in range(6)
+        }
+
+
+def test_partitioned_append_adds_one_file_per_partition(spark, tmp_path):
+    t = IncrementalTable(spark, str(tmp_path / "t"), partition_by=("m",))
+
+    def rows(lo):
+        return spark.range(lo, lo + 40).repartition(4).select(
+            "id", (F.col("id") % 2).alias("m")
+        )
+
+    t.apply(rows(0))
+    before = _files_per_partition(t.path)
+    out = t.apply(rows(40), strategy="append")
+    after = _files_per_partition(t.path)
+    assert {k: after[k] - before.get(k, 0) for k in after} == {"m=0": 1, "m=1": 1}
+    assert sorted(r.id for r in out.collect()) == list(range(80))
+
+
+def test_partition_listing_runs_in_the_driver(spark, tmp_path):
+    """Reading a 40-partition directory lists it in the driver: the only
+    job is the parquet schema read, not a distributed listing job."""
+    path = str(tmp_path / "p40")
+    spark.range(40).withColumn("p", F.col("id")).write.partitionBy("p").parquet(path)
+    sc = spark.sparkContext
+    group = f"listing-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "read a 40-partition table")
+    try:
+        df = spark.read.parquet(path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.columns == ["id", "p"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
 
 
 def test_scd2_timestamp_strategy(spark):

@@ -617,3 +617,22 @@ class TestExactGlobalRank:
         # exact NTILE balance: sizes differ by at most 1
         assert max(phases.values()) - min(phases.values()) <= 1
         assert sum(phases.values()) == 103
+
+    def test_phase_is_a_carry_column_without_phases(self, spark):
+        """``phase`` is an output only when ``phases > 0``; otherwise a
+        caller column of that name is carried through."""
+        from olist_snowflake_dbt_spark.operators.sampling import (
+            exact_global_rank,
+        )
+
+        df = spark.createDataFrame(
+            [(i, i % 5, i * 10) for i in range(20)],
+            "doc_id long, s long, phase long",
+        )
+        out = exact_global_rank(df, "s", "doc_id", carry_cols=["phase"])
+        assert out.columns == ["doc_id", "s", "global_rank", "phase"]
+        assert {r.doc_id: r.phase for r in out.collect()} == {
+            i: i * 10 for i in range(20)
+        }
+        with pytest.raises(ValueError, match="carry_cols"):
+            exact_global_rank(df, "s", "doc_id", phases=2, carry_cols=["phase"])
